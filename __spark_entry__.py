@@ -345,9 +345,7 @@ def q_tml_merge_conditional_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         MergeClause("matched", "delete", condition="n_tok % 5 = 0"),
         MergeClause("not_matched", "insert"),
     ]
-    res = merge_conditional(
-        table, upd.unionByName(ins), clauses, probe_columns=["n_tok"]
-    )
+    res = merge_conditional(table, upd.unionByName(ins), clauses)
     assert res.updated > 0 and res.inserted > 0  # cascade exercised
     return _scan_summary(table.scan())
 

@@ -28,6 +28,7 @@ from __future__ import annotations
 import argparse
 import dataclasses
 import json
+import re
 import sys
 
 
@@ -35,6 +36,9 @@ def _json(obj) -> None:
     if dataclasses.is_dataclass(obj):
         obj = dataclasses.asdict(obj)
     print(json.dumps(obj, default=str))
+
+
+_QUALIFIED = re.compile(r"[^.=\s]+\.[^.=\s]+")
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -233,6 +237,15 @@ def main(argv: list[str] | None = None) -> int:
     sp.add_argument("--config", required=True)
 
     a = p.parse_args(argv)
+    mappings = {}  # --table-mapping: malformed values are usage errors (exit 2)
+    for m in getattr(a, "table_mapping", None) or []:
+        src, _, dst = m.partition("=")
+        if not (_QUALIFIED.fullmatch(src) and _QUALIFIED.fullmatch(dst)):
+            p.error(
+                f"--table-mapping {m!r}: expected src_db.src_tbl=dst_db.dst_tbl "
+                "(two-part names on both sides of '=')"
+            )
+        mappings[src] = dst
 
     from circus_train_spark.meta.catalog import TokenTable
     from circus_train_spark.session import get_spark
@@ -384,10 +397,7 @@ def main(argv: list[str] | None = None) -> int:
                 partition_filter=pf,
                 partition_limit=a.partition_limit,
                 propagate_deletes=a.propagate_deletes,
-                table_mappings=dict(
-                    m.split("=", 1) for m in (a.table_mapping or [])
-                )
-                or None,
+                table_mappings=mappings or None,
             )
         )
         return 0

@@ -46,7 +46,7 @@ from collections.abc import Iterable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from circus_train_spark.ids import new_event_id
@@ -102,11 +102,17 @@ _ARROW_DELETE_MANIFEST_SCHEMA = pa.schema(
 
 
 def _strip_uri(p: str) -> str:
+    """A ``file:`` URI (as ``input_file_name()`` reports it) as a plain path."""
     if p.startswith("file:"):
         p = p[len("file:") :]
         while p.startswith("//"):
             p = p[1:]
     return p
+
+
+def _strip_uri_col(c: Column) -> Column:
+    """Column form of ``_strip_uri``."""
+    return F.regexp_replace(c, "^file:/+", "/")
 
 
 class TokenTable:
@@ -524,7 +530,7 @@ class TokenTable:
         if pos_key_files or pos_col:
             df = df.withColumn(
                 "_mor_fp",
-                F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/"),
+                _strip_uri_col(F.col("_metadata.file_path")),
             ).withColumn("_mor_rp", F.col("_metadata.row_index"))
         if pos_key_files:
             pos = self.spark.read.parquet(*pos_key_files).select(

@@ -40,7 +40,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from circus_train_spark.ids import new_event_id
-from circus_train_spark.meta.catalog import TokenTable
+from circus_train_spark.meta.catalog import TokenTable, _strip_uri, _strip_uri_col
 from circus_train_spark.meta.lineage import STATUS_DONE, LineageRecord
 
 OP_DELETE = "delete"
@@ -68,14 +68,6 @@ class UpdateResult:
     files_pruned: int
     duration_s: float
     delete_files_written: int = 0  # merge-on-read: old versions suppressed
-
-
-def _strip(p: str) -> str:
-    if p.startswith("file:"):
-        p = p[5:]
-        while p.startswith("//"):
-            p = p[1:]
-    return p
 
 
 def _write_key_file(df, dest_path: str) -> int:
@@ -124,7 +116,7 @@ def _classify(table: TokenTable, base, predicate: str, doc_id_range, n_tok_range
             .agg(F.count(F.lit(1)).alias("m"))
             .collect()
         )
-        matched = {_strip(r["_file"]): r["m"] for r in rows}
+        matched = {_strip_uri(r["_file"]): r["m"] for r in rows}
     return entries, paths, matched, n_pruned
 
 
@@ -210,9 +202,7 @@ def delete_where(
                 table.scan_tagged(partial, file_col="_file", pos_col="_pos")
                 .filter(pred)
                 .select(
-                    F.regexp_replace(F.col("_file"), "^file:/+", "/").alias(
-                        "file_path"
-                    ),
+                    _strip_uri_col(F.col("_file")).alias("file_path"),
                     F.col("_pos").alias("row_pos"),
                 )
             )

@@ -1,48 +1,75 @@
-"""MERGE INTO — broadcast-or-sort-merge join plan, copy-on-write file groups.
+"""MERGE INTO — one copy-on-write plan behind two entry points.
 
-Change-set schema: the data columns plus ``_op`` ∈ {``upsert``, ``delete``}
-(tokens/n_tok/source may be NULL for deletes). Semantics:
+``merge_conditional`` takes SQL-style clauses:
 
-- ``upsert`` with a matching ``doc_id``  → UPDATE (row replaced)
-- ``upsert`` with no match               → INSERT
-- ``delete`` with a matching ``doc_id``  → DELETE (no-op if absent)
+  WHEN MATCHED [AND <cond>] THEN UPDATE SET col = <expr>, ...
+  WHEN MATCHED [AND <cond>] THEN DELETE
+  WHEN NOT MATCHED [AND <cond>] THEN INSERT [(col = <expr>, ...)]
+
+Conditions/expressions are Spark SQL over the TARGET row's columns by name
+plus the SOURCE row's columns as ``s_<col>`` (e.g. ``"s_n_tok > n_tok"``).
+Clause order is significant: the first clause whose condition holds wins for
+each row (ANSI MERGE semantics); a matched row matching no clause is left
+untouched, a source row matching no NOT MATCHED clause is ignored. Reference
+analogue: the per-partition create-vs-alter classification of
+``core/replica/Replica.java:177-204`` generalized to row granularity.
+
+``merge_into`` is a clause preset over the same core for a change set of the
+data columns plus ``_op`` ∈ {``upsert``, ``delete``}:
+
+  WHEN MATCHED AND s__op = 'delete' THEN DELETE
+  WHEN MATCHED THEN UPDATE SET *
+  WHEN NOT MATCHED AND s__op = 'upsert' THEN INSERT
 
 Plan (all joins on ``doc_id``):
-1. **file pruning** — manifest entries whose [min_doc_id, max_doc_id] range
-   could contain a change key survive; everything else is out of scope
-   before any data read (stats-based skip; works best after clustering).
-2. **touched-file probe** — read only the ``doc_id`` column of surviving
-   files (column pruning to one string column), **left-semi join** against
-   the change keys, collect the distinct ``input_file_name()`` set. This is
-   the reference's replica-side hash probe re-expressed distributed
-   (``core/replica/Replica.java:177-204,290-296``).
-3. **copy-on-write rewrite** — read the touched files fully, **left-anti
-   join** away all changed keys (updates + deletes; the reference's
+1. **pre-pass** — one bounded pass over the source. Up to
+   ``DRIVER_PRUNE_THRESHOLD_KEYS`` keys are collected and checked for
+   duplicates driver-side; a larger source pays one aggregation instead.
+   Each source row's NOT MATCHED clause is evaluated here (it can only see
+   the source row).
+2. **file pruning** — manifest entries whose [min_doc_id, max_doc_id] range
+   could contain a source key survive: a driver-side binary search over the
+   collected keys, or a distributed prefix-bucket join for large sources.
+3. **probe** — ONE pass joins the candidate files against the source and
+   evaluates the matched-clause cascade. Catalyst prunes the target read to
+   ``doc_id`` plus the condition columns. Per file it yields the clause
+   counts (hence the touched files), how many rows of each NOT MATCHED
+   clause did match, and for a collected source the matched keys themselves
+   (a large source keeps them cached instead), so the candidates are scanned
+   once.
+4. **copy-on-write write** — touched files are rewritten through the
+   cascade (DELETE rows dropped, UPDATE columns reassigned) and unioned with
+   the insert rows (source anti-join the matched keys — the reference's
    propagate-deletes anti-join, ``core/replica/DestructiveReplica.java:
-   83-127``), union all upsert rows, write new files per partition.
-   Untouched files are not rewritten — byte-identical, the copy-on-write
-   minimality contract.
-4. single atomic commit: remove touched files, add rewritten ones.
+   83-127``). Untouched files are not rewritten — byte-identical, the
+   copy-on-write minimality contract.
+5. one lineage record and one atomic commit: remove touched files, add the
+   rewritten ones.
 
-Join strategy: the change side is broadcast when its estimated size is under
-``broadcast_threshold_bytes`` (like Catalyst's autoBroadcastJoinThreshold,
-decided here from known change-set size), else Catalyst/AQE picks a
-sort-merge or shuffled-hash join on the shuffled key.
+The source side is broadcast up to ``BROADCAST_THRESHOLD_ROWS`` rows, else
+Catalyst/AQE picks a sort-merge or shuffled-hash join. Pending merge-on-read
+deletes are honored throughout (probe and rewrite read through the
+delete-aware scan).
 """
 
 from __future__ import annotations
 
 import time
+from collections import Counter
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from circus_train_spark.ids import new_event_id
-from circus_train_spark.meta.catalog import TokenTable
+from circus_train_spark.meta.catalog import TokenTable, _strip_uri
 from circus_train_spark.meta.lineage import STATUS_DONE, LineageRecord
 
 OP = "merge"
+# size selections made from the source's row count
+BROADCAST_THRESHOLD_ROWS = 1_000_000
+DRIVER_PRUNE_THRESHOLD_KEYS = 200_000
 
 
 @dataclass
@@ -54,6 +81,7 @@ class MergeResult:
     inserted: int
     updated: int
     deleted: int
+    clause_rows: list[int]  # actionable rows per clause, clause order
     strategy: str
     duration_s: float
 
@@ -145,199 +173,6 @@ def _prune_by_stats(entries: list[dict], keys_df: DataFrame) -> tuple[list[dict]
     return kept, len(entries) - len(kept)
 
 
-def merge_into(
-    table: TokenTable,
-    changes: DataFrame,
-    broadcast_threshold_rows: int = 1_000_000,
-    driver_prune_threshold_keys: int = 200_000,
-    verify: bool = True,
-    run_id: str | None = None,
-    extra_summary: dict | None = None,
-) -> MergeResult:
-    t0 = time.monotonic()
-    event_id = run_id or new_event_id()
-    base = table.current_snapshot()
-
-    data_cols = [f.name for f in table.data_schema().fields]
-    changes = changes.select(*data_cols, "_op").cache()
-    # Single bounded pre-pass: the common small-churn merge (change set
-    # under the driver-prune threshold) collects its (doc_id, _op) pairs
-    # ONCE and derives count / duplicate-key validation / upsert-count /
-    # sorted prune keys driver-side — zero further pre-jobs before the
-    # probe. Only an over-threshold change set pays the aggregation pass
-    # (which itself replaced three serial jobs in round 1; merge was the
-    # worst scaler at 0.53 N->4N before that). CollectLimit executes
-    # incrementally, so the small-path peek never scans a huge change set.
-    head = (
-        changes.select("doc_id", "_op")
-        .limit(driver_prune_threshold_keys + 1)
-        .collect()
-    )
-    if len(head) <= driver_prune_threshold_keys:
-        n_changes = len(head)
-        n_upserts = sum(1 for r in head if r["_op"] == "upsert")
-        key_set = {r["doc_id"] for r in head}
-        n_distinct = len(key_set)
-        small_path_keys: list[str] | None = sorted(key_set)
-    else:
-        pre = changes.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct("doc_id").alias("nd"),
-            F.count(F.when(F.col("_op") == "upsert", 1)).alias("nu"),
-        ).collect()[0]
-        n_changes, n_distinct, n_upserts = pre["n"], pre["nd"], pre["nu"]
-        small_path_keys = None
-    if n_distinct != n_changes:
-        changes.unpersist()
-        raise ValueError(
-            f"ambiguous MERGE: {n_changes - n_distinct} duplicate doc_id keys in "
-            "the change set (each key may appear at most once)"
-        )
-    n_deletes = n_changes - n_upserts
-    use_broadcast = n_changes <= broadcast_threshold_rows
-    strategy = "broadcast" if use_broadcast else "sort_merge"
-
-    def keyside(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if use_broadcast else df
-
-    keys = changes.select("doc_id")  # keys are distinct (validated above)
-
-    # 1. stats-based file pruning — size-adaptive: small change sets were
-    # already collected above and are pruned driver-side with a binary
-    # search; large ones go through the distributed prefix-bucket join.
-    entries = table.manifest_entries(base.snapshot_id)
-    if small_path_keys is not None:
-        candidates, n_pruned_stats = _prune_by_stats_local(entries, small_path_keys)
-    else:
-        candidates, n_pruned_stats = _prune_by_stats(entries, keys)
-
-    # 2. touched-file probe: doc_id column only, joined against (key, _op)
-    # so ONE job yields the touched-file set, matched-row count AND the
-    # matched-upsert (=update) count — no second scan of the touched files.
-    touched: list[str] = []
-    n_existing = 0
-    matched_upserts = 0
-    if candidates:
-        probe = (
-            table.scan_tagged([e["file_path"] for e in candidates])
-            .select("doc_id", "_file")
-            .join(keyside(changes.select("doc_id", "_op")), "doc_id", "inner")
-        )
-        # per-file grouped aggregate (NOT collect_set into one global row):
-        # the reduction stays parallel and each result row is tiny, so a
-        # 10^6-touched-file merge never funnels a multi-hundred-MB file-set
-        # array through a single reducer task.
-        per_file = probe.groupBy("_file").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(F.when(F.col("_op") == "upsert", 1)).alias("nu"),
-        ).collect()
-        n_existing = sum(r["n"] for r in per_file)
-        matched_upserts = sum(r["nu"] for r in per_file)
-        touched = sorted(_strip(r["_file"]) for r in per_file)
-
-    n_updated = matched_upserts
-    n_inserted = n_upserts - matched_upserts
-    n_deleted = n_existing - matched_upserts  # matched delete keys
-
-    # 3. copy-on-write rewrite of touched files + all upsert rows
-    survivors = None
-    if touched:
-        survivors = table.scan(files=touched).join(keyside(keys), "doc_id", "left_anti")
-    # squeeze the (small) upsert side into few source-sorted partitions so
-    # the union doesn't fan tiny writer files across every (task, source)
-    n_up_parts = max(1, n_upserts // 100_000)
-    upsert_rows = (
-        changes.filter(F.col("_op") == "upsert")
-        .select(*data_cols)
-        .repartition(n_up_parts)
-        .sortWithinPartitions("source")
-    )
-    out = upsert_rows if survivors is None else survivors.unionByName(upsert_rows)
-
-    touched_set = set(touched)
-    rewritten_bytes = sum(e["file_size"] for e in entries if e["file_path"] in touched_set)
-    # shuffle-free copy-on-write: the scan of touched (single-source) files
-    # already groups rows by source within tasks, so the dynamic-partition
-    # writer streams them straight out — no exchange of the wide token rows.
-    # Write parallelism = scan split count; stray small files are the
-    # compaction operator's job, not the merge's.
-    added = table.write_data_files(
-        out, event_id, num_files=None, sub_dir="merged", shuffle=False
-    )
-
-    table.lineage.append(
-        LineageRecord(
-            run_id=event_id,
-            operation=OP,
-            group_id=event_id,
-            partition=None,
-            files_in=touched,
-            files_out=[e["file_path"] for e in added],
-            rows=sum(e["n_rows"] for e in added),
-            bytes_in=rewritten_bytes,
-            bytes_out=sum(e["file_size"] for e in added),
-            status=STATUS_DONE,
-            duration_s=time.monotonic() - t0,
-        )
-    )
-    snap = table.commit(
-        operation=OP,
-        added=added,
-        removed_paths=set(touched),
-        summary={
-            "strategy": strategy,
-            "inserted": n_inserted,
-            "updated": n_updated,
-            "deleted": n_deleted,
-            "files_pruned_by_stats": n_pruned_stats,
-            **(extra_summary or {}),
-        },
-        expected_parent_id=base.snapshot_id,
-        event_id=event_id,
-    )
-
-    if verify:
-        _verify_merge(table, base.snapshot_id, snap.snapshot_id, changes)
-    changes.unpersist()
-    return MergeResult(
-        snapshot_id=snap.snapshot_id,
-        files_touched=len(touched),
-        files_pruned=n_pruned_stats,
-        files_out=len(added),
-        inserted=n_inserted,
-        updated=n_updated,
-        deleted=n_deleted,
-        strategy=strategy,
-        duration_s=time.monotonic() - t0,
-    )
-
-
-def _strip(p: str) -> str:
-    if p.startswith("file:"):
-        p = p[len("file:") :]
-        while p.startswith("//"):
-            p = p[1:]
-    return p
-
-
-# ------------------------------------------------------- conditional MERGE
-#
-# SQL-style clause objects:
-#
-#   WHEN MATCHED [AND <cond>] THEN UPDATE SET col = <expr>, ...
-#   WHEN MATCHED [AND <cond>] THEN DELETE
-#   WHEN NOT MATCHED [AND <cond>] THEN INSERT [(col = <expr>, ...)]
-#
-# Conditions/expressions are Spark SQL over the TARGET row's columns by
-# name plus the SOURCE row's columns as ``s_<col>`` (e.g.
-# ``"s_n_tok > n_tok"``). Clause order is significant: the first clause
-# whose condition holds wins for each row (ANSI MERGE semantics); a
-# matched row matching no clause is left untouched, a source row matching
-# no NOT MATCHED clause is ignored. Reference analogue: the per-partition
-# create-vs-alter classification of ``core/replica/Replica.java:177-204``
-# generalized to row granularity with per-clause predicates.
-
-
 @dataclass
 class MergeClause:
     when: str                                 # "matched" | "not_matched"
@@ -358,20 +193,6 @@ class MergeClause:
             raise ValueError(f"unknown columns in SET: {sorted(bad)}")
 
 
-@dataclass
-class MergeConditionalResult:
-    snapshot_id: int | None
-    files_touched: int
-    files_pruned: int
-    files_out: int
-    inserted: int
-    updated: int
-    deleted: int
-    clause_rows: list[int]  # actionable rows per clause, clause order
-    strategy: str
-    duration_s: float
-
-
 def _clause_action_idx(clauses: list[tuple[int, MergeClause]]):
     """First-matching-clause index as a column cascade; -1 = no clause."""
     expr = F.lit(-1)
@@ -381,182 +202,198 @@ def _clause_action_idx(clauses: list[tuple[int, MergeClause]]):
     return expr
 
 
-def merge_conditional(
+def _assign(clauses, data_cols: list[str], action_col: str, default) -> list:
+    """Per data column: the assignment of the clause whose index is in
+    ``action_col``, else ``default(col)``."""
+    proj = []
+    for col in data_cols:
+        expr = default(col)
+        for i, c in clauses:
+            if col in (c.assignments or {}):
+                expr = F.when(
+                    F.col(action_col) == i, F.expr(c.assignments[col])
+                ).otherwise(expr)
+        proj.append(expr.alias(col))
+    return proj
+
+
+def _merge(
     table: TokenTable,
     source: DataFrame,
     clauses: list[MergeClause],
-    broadcast_threshold_rows: int = 1_000_000,
-    driver_prune_threshold_keys: int = 200_000,
-    probe_columns: list[str] | None = None,
+    operation: str,
     run_id: str | None = None,
-) -> MergeConditionalResult:
-    """Copy-on-write conditional MERGE. Plan (scale posture identical to
-    ``merge_into``): stats-prune candidate files by the source key range →
-    ONE probe job over the candidates evaluating the matched-clause cascade
-    (reads ``probe_columns`` when given — pass the condition columns to
-    keep the probe narrow; default reads the full row) → rewrite ONLY files
-    holding an actionable row → append INSERT rows (source anti-join the
-    matched keys) → one atomic commit. Pending merge-on-read deletes are
-    honored throughout (the probe and rewrite read through the delete-aware
-    scan)."""
+    extra_summary: dict | None = None,
+) -> MergeResult:
+    """The copy-on-write MERGE core (plan in the module docstring)."""
     t0 = time.monotonic()
     event_id = run_id or new_event_id()
     base = table.current_snapshot()
     data_cols = [f.name for f in table.data_schema().fields]
     for c in clauses:
         c.validate(data_cols)
-    matched_clauses = [
-        (i, c) for i, c in enumerate(clauses) if c.when == "matched"
-    ]
-    insert_clauses = [
-        (i, c) for i, c in enumerate(clauses) if c.when == "not_matched"
-    ]
+    matched = [(i, c) for i, c in enumerate(clauses) if c.when == "matched"]
+    inserts = [(i, c) for i, c in enumerate(clauses) if c.when == "not_matched"]
+    # source columns as s_<col>, plus the NOT MATCHED clause each row takes
+    # if its key turns out absent (_ins, -1 = none)
+    src_cols = data_cols + [c for c in source.columns if c not in data_cols]
+    srcd = (
+        source.select(*[F.col(c).alias(f"s_{c}") for c in src_cols])
+        .withColumn("_ins", _clause_action_idx(inserts))
+        .cache()
+    )
 
-    srcd = source.select(
-        *[F.col(c).alias(f"s_{c}") for c in data_cols]
-    ).cache()
-    pre = srcd.agg(
-        F.count(F.lit(1)).alias("n"), F.count_distinct("s_doc_id").alias("nd")
-    ).collect()[0]
-    if pre["nd"] != pre["n"]:
+    # 1. single bounded pre-pass. CollectLimit executes incrementally, so
+    # the small-path peek never scans a huge source; only an over-threshold
+    # source pays the aggregation.
+    head = (
+        srcd.select("s_doc_id", "_ins")
+        .limit(DRIVER_PRUNE_THRESHOLD_KEYS + 1)
+        .collect()
+    )
+    if len(head) <= DRIVER_PRUNE_THRESHOLD_KEYS:
+        sorted_keys: list[str] | None = sorted({r["s_doc_id"] for r in head})
+        n_source, n_distinct = len(head), len(sorted_keys)
+        ins_rows = Counter(r["_ins"] for r in head)
+    else:
+        pre = srcd.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct("s_doc_id").alias("nd"),
+            *[F.count(F.when(F.col("_ins") == i, 1)).alias(str(i)) for i, _ in inserts],
+        ).collect()[0]
+        sorted_keys = None
+        n_source, n_distinct = pre["n"], pre["nd"]
+        ins_rows = Counter({i: pre[str(i)] for i, _ in inserts})
+    if n_distinct != n_source:
         srcd.unpersist()
         raise ValueError(
-            f"ambiguous MERGE: {pre['n'] - pre['nd']} duplicate source keys"
+            f"ambiguous MERGE: {n_source - n_distinct} duplicate doc_id keys in "
+            "the source (each key may appear at most once)"
         )
-    n_source = pre["n"]
-    use_broadcast = n_source <= broadcast_threshold_rows
+    use_broadcast = n_source <= BROADCAST_THRESHOLD_ROWS
     strategy = "broadcast" if use_broadcast else "sort_merge"
 
     def keyside(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if use_broadcast else df
 
-    keys = srcd.select(F.col("s_doc_id").alias("doc_id"))
-
-    # 1. stats-based candidate pruning (same size-adaptive path as merge_into)
+    # 2. stats-based file pruning, size-adaptive
     entries = table.manifest_entries(base.snapshot_id)
-    if n_source <= driver_prune_threshold_keys:
-        sorted_keys = sorted(r["doc_id"] for r in keys.collect())
+    if sorted_keys is not None:
         candidates, n_pruned = _prune_by_stats_local(entries, sorted_keys)
     else:
-        candidates, n_pruned = _prune_by_stats(entries, keys)
-    cand_paths = [e["file_path"] for e in candidates]
+        candidates, n_pruned = _prune_by_stats(
+            entries, srcd.select(F.col("s_doc_id").alias("doc_id"))
+        )
 
-    # 2. probe: evaluate the matched cascade once, reduce per file + clause
+    # 3. probe. Per-file grouped aggregate (NOT one global collect_set): the
+    # reduction stays parallel and each result row is tiny. The matched keys
+    # of rows a NOT MATCHED clause would take come back with the counts for
+    # a small source; a large one keeps them cached instead of funnelling
+    # them through the driver.
     touched: list[str] = []
-    clause_rows = [0] * len(clauses)
-    if cand_paths and matched_clauses:
-        probe_src = table.scan_tagged(cand_paths)
-        if probe_columns is not None:
-            need = sorted({*probe_columns, "doc_id"})
-            probe_src = probe_src.select(*need, "_file")
-        probed = (
-            probe_src.join(
-                keyside(srcd), probe_src["doc_id"] == F.col("s_doc_id"), "inner"
+    clause_rows = [ins_rows[i] for i in range(len(clauses))]  # inserts: minus matched
+    hits = matched_keys = None
+    if candidates:
+        # one row per matched (target, source) pair; Catalyst prunes the
+        # target read to doc_id plus the condition columns
+        hits = (
+            table.scan_tagged([e["file_path"] for e in candidates])
+            .join(keyside(srcd), F.col("doc_id") == F.col("s_doc_id"))
+            .select(
+                "_file", "s_doc_id", "_ins", _clause_action_idx(matched).alias("_action")
             )
-            .withColumn("_action", _clause_action_idx(matched_clauses))
-            .filter(F.col("_action") >= 0)
         )
-        per_file = (
-            probed.groupBy("_file")
-            .pivot("_action", [i for i, _ in matched_clauses])
-            .count()
-            .collect()
-        )
+        aggs = [
+            F.count(F.when(F.col(col) == i, 1)).alias(str(i))
+            for col, group in (("_action", matched), ("_ins", inserts))
+            for i, _ in group
+        ]
+        if sorted_keys is None:
+            hits = hits.cache()
+            matched_keys = hits.select("s_doc_id")
+        else:
+            key = F.when(F.col("_ins") >= 0, F.col("s_doc_id"))
+            aggs.append(F.collect_list(key).alias("_keys"))
+        per_file = hits.groupBy("_file").agg(*aggs).collect()
         for r in per_file:
-            touched.append(_strip(r["_file"]))
-            for i, _ in matched_clauses:
-                clause_rows[i] += r[str(i)] or 0
-        touched = sorted(touched)
-    n_updated = sum(
-        clause_rows[i] for i, c in matched_clauses if c.action == "update"
-    )
-    n_deleted = sum(
-        clause_rows[i] for i, c in matched_clauses if c.action == "delete"
-    )
+            if any(r[str(i)] for i, _ in matched):
+                touched.append(_strip_uri(r["_file"]))
+            for i, _ in matched:
+                clause_rows[i] += r[str(i)]
+            for i, _ in inserts:
+                clause_rows[i] -= r[str(i)]
+        touched.sort()
+        keys = [k for r in per_file for k in r["_keys"]] if matched_keys is None else []
+        if keys:  # an Arrow table becomes a LocalRelation: no Python RDD, no job
+            matched_keys = table.spark.createDataFrame(pa.table({"s_doc_id": keys}))
 
-    # 3. rewrite touched files through the clause cascade
+    # 4. copy-on-write rewrite of touched files through the cascade
     out = None
     if touched:
         rows = table.scan(files=touched).join(
             keyside(srcd), F.col("doc_id") == F.col("s_doc_id"), "left"
         )
         action = F.when(
-            F.col("s_doc_id").isNotNull(), _clause_action_idx(matched_clauses)
+            F.col("s_doc_id").isNotNull(), _clause_action_idx(matched)
         ).otherwise(F.lit(-1))
         rows = rows.withColumn("_action", action)
-        # drop rows claimed by a DELETE clause
-        del_ids = [i for i, c in matched_clauses if c.action == "delete"]
-        if del_ids:
-            rows = rows.filter(~F.col("_action").isin(del_ids))
-        proj = []
-        for col in data_cols:
-            expr = F.col(col)
-            for i, c in matched_clauses:
-                if c.action == "update" and col in (c.assignments or {}):
-                    expr = F.when(
-                        F.col("_action") == i, F.expr(c.assignments[col])
-                    ).otherwise(expr)
-            proj.append(expr.alias(col))
-        out = rows.select(*proj)
+        dropped = [i for i, c in matched if c.action == "delete"]
+        if dropped:
+            rows = rows.filter(~F.col("_action").isin(dropped))
+        updates = [(i, c) for i, c in matched if c.action == "update"]
+        out = rows.select(*_assign(updates, data_cols, "_action", F.col))
 
-    # 4. inserts: source keys matched nowhere in the candidates (keys
-    # outside every candidate's range are unmatched by construction)
-    n_inserted = 0
-    if insert_clauses:
-        matched_keys = (
-            table.scan_tagged(cand_paths).select("doc_id")
-            if cand_paths
-            else keys.limit(0)
+    # ... plus the insert rows: source keys matched nowhere in the
+    # candidates (keys outside every candidate's range are unmatched by
+    # construction)
+    n_inserted = sum(clause_rows[i] for i, _ in inserts)
+    if n_inserted:
+        ins = srcd.filter(F.col("_ins") >= 0)
+        if matched_keys is not None:
+            ins = ins.join(keyside(matched_keys), "s_doc_id", "left_anti")
+        # squeeze the (small) insert side into few source-sorted partitions,
+        # without an exchange, so the union doesn't fan tiny writer files
+        # across every (task, source)
+        ins = (
+            ins.select(*_assign(inserts, data_cols, "_ins", lambda c: F.col(f"s_{c}")))
+            .coalesce(max(1, n_inserted // 100_000))
+            .sortWithinPartitions("source")
         )
-        unmatched = srcd.join(
-            keyside(matched_keys),
-            F.col("s_doc_id") == F.col("doc_id"),
-            "left_anti",
-        ).withColumn("_action", _clause_action_idx(insert_clauses))
-        unmatched = unmatched.filter(F.col("_action") >= 0)
-        proj = []
-        for col in data_cols:
-            expr = F.col(f"s_{col}")
-            for i, c in insert_clauses:
-                if col in (c.assignments or {}):
-                    expr = F.when(
-                        F.col("_action") == i, F.expr(c.assignments[col])
-                    ).otherwise(expr)
-            proj.append(expr.alias(col))
-        ins_counts = (
-            unmatched.groupBy("_action").count().collect()
-        )
-        for r in ins_counts:
-            clause_rows[r["_action"]] += r["count"]
-            n_inserted += r["count"]
-        ins = unmatched.select(*proj)
         out = ins if out is None else out.unionByName(ins)
 
+    # shuffle-free write: the scan of touched (single-source) files already
+    # groups rows by source within tasks, so the dynamic-partition writer
+    # streams them straight out — no exchange of the wide token rows. Stray
+    # small files are the compaction operator's job, not the merge's.
     added: list[dict] = []
     if out is not None:
         added = table.write_data_files(
             out, event_id, num_files=None, sub_dir="merged", shuffle=False
         )
+
+    # 5. one lineage record, one atomic commit
     touched_set = set(touched)
     table.lineage.append(
         LineageRecord(
             run_id=event_id,
-            operation="merge_conditional",
+            operation=operation,
             group_id=event_id,
             partition=None,
             files_in=touched,
             files_out=[e["file_path"] for e in added],
             rows=sum(e["n_rows"] for e in added),
             bytes_in=sum(
-                e["file_size"] for e in entries if e["file_path"] in touched_set
+                e["file_size"] for e in candidates if e["file_path"] in touched_set
             ),
             bytes_out=sum(e["file_size"] for e in added),
             status=STATUS_DONE,
             duration_s=time.monotonic() - t0,
         )
     )
+    n_updated = sum(clause_rows[i] for i, c in matched if c.action == "update")
+    n_deleted = sum(clause_rows[i] for i, c in matched if c.action == "delete")
     snap = table.commit(
-        operation="merge_conditional",
+        operation=operation,
         added=added,
         removed_paths=touched_set,
         summary={
@@ -569,12 +406,15 @@ def merge_conditional(
                 for c in clauses
             ],
             "files_pruned_by_stats": n_pruned,
+            **(extra_summary or {}),
         },
         expected_parent_id=base.snapshot_id,
         event_id=event_id,
     )
+    if hits is not None:
+        hits.unpersist()
     srcd.unpersist()
-    return MergeConditionalResult(
+    return MergeResult(
         snapshot_id=snap.snapshot_id,
         files_touched=len(touched),
         files_pruned=n_pruned,
@@ -586,6 +426,44 @@ def merge_conditional(
         strategy=strategy,
         duration_s=time.monotonic() - t0,
     )
+
+
+def merge_into(
+    table: TokenTable,
+    changes: DataFrame,
+    verify: bool = True,
+    run_id: str | None = None,
+    extra_summary: dict | None = None,
+) -> MergeResult:
+    """Upsert/delete a change set (data columns plus ``_op``): the clause
+    preset over the MERGE core. ``verify`` checks the row-level
+    postconditions against the committed snapshot."""
+    data_cols = [f.name for f in table.data_schema().fields]
+    changes = changes.select(*data_cols, "_op")
+    if verify:
+        changes = changes.cache()
+    preset = [
+        MergeClause("matched", "delete", condition="s__op = 'delete'"),
+        MergeClause("matched", "update", assignments={c: f"s_{c}" for c in data_cols}),
+        MergeClause("not_matched", "insert", condition="s__op = 'upsert'"),
+    ]
+    res = _merge(table, changes, preset, OP, run_id, extra_summary)
+    if verify:
+        parent = table.snapshot(res.snapshot_id).parent_id
+        _verify_merge(table, parent, res.snapshot_id, changes)
+        changes.unpersist()
+    return res
+
+
+def merge_conditional(
+    table: TokenTable,
+    source: DataFrame,
+    clauses: list[MergeClause],
+    run_id: str | None = None,
+) -> MergeResult:
+    """Copy-on-write conditional MERGE of ``source`` through ``clauses``
+    (semantics and plan in the module docstring)."""
+    return _merge(table, source, clauses, "merge_conditional", run_id)
 
 
 def _verify_merge(

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from circus_train_spark.functions.digest import row_hash
 from circus_train_spark.meta import schema as S
-from circus_train_spark.meta.catalog import TokenTable
+from circus_train_spark.meta.catalog import TokenTable, _strip_uri_col
 
 
 @dataclass
@@ -63,7 +63,7 @@ def file_audit(table: TokenTable, snapshot_id: int | None = None) -> DataFrame:
                 F.count(F.lit(1)).alias("d_rows"),
                 F.expr("bit_xor(_h)").alias("d_digest"),
             )
-            .withColumn("_file", F.regexp_replace("_file", "^file:/+", "/"))
+            .withColumn("_file", _strip_uri_col(F.col("_file")))
         )
         joined = manifest.join(
             actual, manifest.file_path == actual._file, "left"

@@ -2,6 +2,8 @@
 pluggable catalog adapter (MetaStoreClientFactory analogue), metrics
 listener (JobMetrics/MetricsListener analogue)."""
 
+import pytest
+
 from circus_train_spark.meta.adapter import CatalogAdapter, InMemoryCatalog
 from circus_train_spark.meta.catalog import TokenTable
 from circus_train_spark.meta.metrics import (
@@ -200,3 +202,21 @@ def test_compare_cli_renders_report(spark, tmp_path, tokens_df, capsys):
     assert rc == 1 and ("CHANGED" in out or "NEW" in out)
     assert "difference(s) across" in out
     assert open(report_file).read().strip() == out.strip()
+
+
+@pytest.mark.parametrize(
+    "mapping", ["db.tok", "db.tok=tok", "tok=db.tok", "db.tok=db.a.b"]
+)
+def test_replicate_cli_rejects_malformed_table_mapping(tmp_path, capsys, mapping):
+    """A ``--table-mapping`` without '=' or without two-part names on both
+    sides is a usage error before any Spark work starts."""
+    from circus_train_spark.cli import main
+
+    with pytest.raises(SystemExit) as exc:
+        main(
+            ["replicate", "--source", str(tmp_path / "s"),
+             "--replica", str(tmp_path / "r"), "--table-mapping", mapping]
+        )
+    assert exc.value.code == 2
+    err = capsys.readouterr().err
+    assert "--table-mapping" in err and "src_db.src_tbl=dst_db.dst_tbl" in err

@@ -1,10 +1,14 @@
 """MERGE INTO: insert/update/delete semantics, copy-on-write minimality."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
+from circus_train_spark.functions.digest import table_digest
 from circus_train_spark.meta.catalog import TokenTable
-from circus_train_spark.operators.merge import merge_into
+from circus_train_spark.operators import merge as merge_mod
+from circus_train_spark.operators.merge import MergeClause, merge_conditional, merge_into
 from circus_train_spark.sources.generator import generate_changes
 
 
@@ -152,13 +156,8 @@ def _cond_source(tokens_df):
     return existing.unionByName(new)
 
 
-def test_merge_conditional_clause_cascade(spark, tmp_path, tokens_df):
-    from circus_train_spark.operators.merge import MergeClause, merge_conditional
-
-    t = TokenTable.create(spark, str(tmp_path / "tbl"))
-    t.append(tokens_df, num_files=12)
-    src = _cond_source(tokens_df).cache()
-    clauses = [
+def _cascade_clauses():
+    return [
         MergeClause(
             "matched",
             "update",
@@ -168,7 +167,13 @@ def test_merge_conditional_clause_cascade(spark, tmp_path, tokens_df):
         MergeClause("matched", "delete", condition="n_tok % 4 = 0"),
         MergeClause("not_matched", "insert"),
     ]
-    res = merge_conditional(t, src, clauses, probe_columns=["n_tok"])
+
+
+def test_merge_conditional_clause_cascade(spark, tmp_path, tokens_df):
+    t = TokenTable.create(spark, str(tmp_path / "tbl"))
+    t.append(tokens_df, num_files=12)
+    src = _cond_source(tokens_df).cache()
+    res = merge_conditional(t, src, _cascade_clauses())
     after = t.scan().cache()
 
     # expected sets computed driver-side with FRESH lineage (src derives
@@ -192,8 +197,6 @@ def test_merge_conditional_clause_cascade(spark, tmp_path, tokens_df):
             assert k not in after_rows, f"{k} not deleted"
     assert sum(1 for k in after_rows if k.startswith("new-")) == exp_ins
     # untouched rows: rows matching no source key are byte-identical
-    from circus_train_spark.functions.digest import table_digest
-
     keys_df = spark.createDataFrame([(k,) for k in src_rows], "doc_id string")
     untouched_before = tokens_df.join(keys_df, "doc_id", "left_anti")
     untouched_after = after.join(keys_df, "doc_id", "left_anti")
@@ -203,8 +206,6 @@ def test_merge_conditional_clause_cascade(spark, tmp_path, tokens_df):
 
 
 def test_merge_conditional_first_clause_wins(spark, tmp_path, tokens_df):
-    from circus_train_spark.operators.merge import MergeClause, merge_conditional
-
     t = TokenTable.create(spark, str(tmp_path / "tbl"))
     t.append(tokens_df, num_files=6)
     # both clauses match every source row: the first (update) must win
@@ -221,8 +222,6 @@ def test_merge_conditional_first_clause_wins(spark, tmp_path, tokens_df):
 
 
 def test_merge_conditional_noop_rows_untouched(spark, tmp_path, tokens_df):
-    from circus_train_spark.operators.merge import MergeClause, merge_conditional
-    from circus_train_spark.functions.digest import table_digest
 
     t = TokenTable.create(spark, str(tmp_path / "tbl"))
     t.append(tokens_df, num_files=6)
@@ -240,8 +239,6 @@ def test_merge_conditional_noop_rows_untouched(spark, tmp_path, tokens_df):
 
 
 def test_merge_conditional_rejects_bad_clauses(spark, tmp_path, tokens_df):
-    from circus_train_spark.operators.merge import MergeClause, merge_conditional
-
     t = TokenTable.create(spark, str(tmp_path / "tbl"))
     t.append(tokens_df.limit(100), num_files=2)
     src = tokens_df.limit(5)
@@ -254,3 +251,111 @@ def test_merge_conditional_rejects_bad_clauses(spark, tmp_path, tokens_df):
         merge_conditional(
             t, src, [MergeClause("matched", "update", assignments={"nope": "1"})]
         )
+
+
+# ------------------------------------------------- one core, two entry points
+
+PRESET = [
+    MergeClause("matched", "delete", condition="s__op = 'delete'"),
+    MergeClause(
+        "matched",
+        "update",
+        assignments={c: f"s_{c}" for c in ("doc_id", "tokens", "n_tok", "source")},
+    ),
+    MergeClause("not_matched", "insert", condition="s__op = 'upsert'"),
+]
+
+# Spark jobs one merge launched on the ``loaded`` fixture before the two
+# entry points shared a core (local[8], 8 shuffle partitions).
+MERGE_INTO_JOBS_BEFORE = 11
+MERGE_CONDITIONAL_JOBS_BEFORE = 18
+
+
+def _jobs(spark, label, fn) -> int:
+    """Number of Spark jobs ``fn()`` launches, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(label, label)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(label))
+
+
+def test_merge_into_is_the_conditional_preset(spark, loaded, tmp_path, tokens_df):
+    changes = generate_changes(spark, tokens_df.count(), seed=42).cache()
+    a = merge_into(loaded, changes, verify=False)
+    other = TokenTable.create(spark, str(tmp_path / "preset"))
+    other.append(tokens_df, num_files=12)
+    b = merge_conditional(other, changes, PRESET)
+    assert (a.inserted, a.updated, a.deleted) == (b.inserted, b.updated, b.deleted)
+    assert a.clause_rows == b.clause_rows == [a.deleted, a.updated, a.inserted]
+    assert a.inserted and a.updated and a.deleted
+    assert table_digest(loaded.scan()) == table_digest(other.scan())
+    changes.unpersist()
+
+
+def _sql_plans(spark) -> dict[int, str]:
+    """Physical plan description of every retained SQL execution, by id."""
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    plans = {}
+    while it.hasNext():
+        e = it.next()
+        plans[e.executionId()] = e.physicalPlanDescription()
+    return plans
+
+
+def test_conditional_probe_reads_only_key_and_condition_columns(spark, loaded, tokens_df):
+    """Catalyst narrows the probe's target read to ``doc_id`` plus the
+    columns the matched conditions use, with no column list passed in."""
+    before = set(_sql_plans(spark))
+    res = merge_conditional(loaded, _cond_source(tokens_df), _cascade_clauses())
+    assert res.files_touched > 0
+    # the probe is the only plan that tags target rows with their file AND
+    # joins the source (the written-file stats read tags, but joins nothing)
+    probes = [
+        p for i, p in _sql_plans(spark).items()
+        if i not in before and "input_file_name" in p and "s_doc_id" in p
+    ]
+    reads = {r for p in probes for r in re.findall(r"ReadSchema: (struct<[^>]*>)", p)}
+    assert probes and reads == {"struct<doc_id:string,n_tok:int>"}
+
+
+def test_merge_job_counts_do_not_grow(spark, loaded, tmp_path, tokens_df):
+    changes = generate_changes(spark, tokens_df.count(), seed=42)
+    n = _jobs(spark, "merge-into-jobs", lambda: merge_into(loaded, changes, verify=False))
+    assert 0 < n <= MERGE_INTO_JOBS_BEFORE
+
+    t = TokenTable.create(spark, str(tmp_path / "cond"))
+    t.append(tokens_df, num_files=12)
+    src = _cond_source(tokens_df).cache()
+    n = _jobs(
+        spark, "merge-cond-jobs", lambda: merge_conditional(t, src, _cascade_clauses())
+    )
+    assert 0 < n < MERGE_CONDITIONAL_JOBS_BEFORE
+    src.unpersist()
+
+
+def test_large_source_path_matches_small(spark, tmp_path, tokens_df, monkeypatch):
+    """Over the driver-prune and broadcast thresholds the core takes the
+    aggregation pre-pass, the distributed stats prune, cached matched keys
+    and a shuffled join; the table it commits must not change."""
+    changes = generate_changes(spark, tokens_df.count(), seed=7).cache()
+    src = _cond_source(tokens_df).cache()
+    digests = []
+    for small in (True, False):
+        if not small:
+            monkeypatch.setattr(merge_mod, "DRIVER_PRUNE_THRESHOLD_KEYS", 4)
+            monkeypatch.setattr(merge_mod, "BROADCAST_THRESHOLD_ROWS", 0)
+        t = TokenTable.create(spark, str(tmp_path / f"t{small}"))
+        t.append(tokens_df, num_files=6)
+        a = merge_into(t, changes, verify=not small)
+        b = merge_conditional(t, src, _cascade_clauses())
+        assert a.strategy == b.strategy == ("broadcast" if small else "sort_merge")
+        digests.append(
+            (a.clause_rows, b.clause_rows, table_digest(t.scan()))
+        )
+    assert digests[0] == digests[1]
+    changes.unpersist()
+    src.unpersist()

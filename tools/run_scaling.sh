@@ -30,4 +30,5 @@ for I in $(seq 1 "$ITERS"); do
     rm -rf "$SPARK_GRAFT_BENCH_DIR"/* 2>/dev/null || true
   done
 done
-python tools/scaling_summary.py
+# report this run alone: its legs must not pool with banked old-commit legs
+python tools/scaling_report.py "$OUT"

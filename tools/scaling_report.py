@@ -12,6 +12,10 @@ scales out of the pool. Leg counts per level are printed so asymmetric
 draws (the 8-cpu side is ~3× cheaper per leg) stay visible.
 
 Usage: python tools/scaling_report.py [final.jsonl [extra.jsonl ...]]
+
+With no arguments it reproduces the banked round-5 pooled table. Given a
+leg file, it pools only the extra files named after it, so a fresh run
+(``tools/run_scaling.sh``) is never pooled with legs of older code.
 """
 
 from __future__ import annotations
@@ -30,13 +34,7 @@ def load(path: str) -> list[dict]:
 
 def main() -> None:
     final_path = sys.argv[1] if len(sys.argv) > 1 else "BENCH_SCALING.jsonl"
-    pre_paths = (
-        sys.argv[2:]
-        if len(sys.argv) > 2
-        else [
-            "BENCH/scaling_r5_3M_set1.jsonl",
-        ]
-    )
+    pre_paths = sys.argv[2:] if len(sys.argv) > 1 else ["BENCH/scaling_r5_3M_set1.jsonl"]
     final = load(final_path)
     pre = [r for p in pre_paths for r in load(p)]
     pre = [r for r in pre if r.get("rows") == final[0].get("rows")]
